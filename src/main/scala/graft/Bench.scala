@@ -27,9 +27,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *   - per-pass times are emitted under "attempts" so a stall is
   *     diagnosable from the driver's JSON alone (it shows up as one
   *     inflated column, not an inflated query);
-  *   - `spark.catalog.clearCache()` between queries drops any `.cache()`
-  *     a query marked (Dedup's shingle/doc caches), so no query times
-  *     another query's leaked cache memory pressure;
+  *   - [[GraftSession.reset]] between queries drops the caches and
+  *     checkpoint blocks a query left, so no query times another query's
+  *     leaked memory pressure;
   *   - all numbers are formatted under Locale.ROOT — a comma-decimal
   *     default locale must not break the machine-parsed JSON line.
   */
@@ -112,29 +112,47 @@ object Bench {
     self + children.map(shuffleWriteBytes).sum
   }
 
+  /** Data dir and core count of a bench session. */
+  private[graft] val sfDir: String =
+    sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+  private[graft] val cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+
+  /** Cumulative GC milliseconds of this JVM. */
+  private[graft] def gcMillis: Long =
+    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
+      .asScala.map(_.getCollectionTime).sum
+
+  /** JVM warmup outside the timed region: class loading, codegen compiler
+    * and parquet reader init otherwise land entirely on the first query. */
+  private[graft] def warmup(spark: SparkSession, sfDir: String): Unit = {
+    import org.apache.spark.sql.functions.{col, explode, row_number}
+    spark.range(1000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()
+    Tables.lineitem(spark, sfDir).limit(100).write.format("noop").mode("overwrite").save()
+    // Also exercise the execution paths nearly every query goes through —
+    // shuffle write/read, hash aggregate, sort-merge/broadcast join,
+    // window, global sort — so the interpreter→C2 compilation of that
+    // shared machinery happens here instead of inside pass 1's timed
+    // regions (measured: pass-1 total ran ~1.5× the pass-3 floor, far
+    // beyond per-query codegen cost). Tiny synthetic input; no data or
+    // results are retained (the noop sink discards every row).
+    val wr = spark.range(0, 200000, 1, 8).selectExpr("id % 1000 AS k", "id AS v")
+    wr.groupBy("k").count().join(wr, "k")
+      .withColumn("rn", row_number().over(
+        org.apache.spark.sql.expressions.Window.partitionBy("k").orderBy("v")))
+      .orderBy("k", "rn").limit(1000)
+      .write.format("noop").mode("overwrite").save()
+    // the text-kernel path (tokenize + shingle explode) the dedup pack
+    // leans on, over a 200-doc slice — compiles the native expressions
+    Tables.documents(spark, sfDir).limit(200)
+      .select(col("doc_id"),
+        explode(graft.functions.NativeExprs.wordShingles(col("text"), 3)).as("sh"))
+      .groupBy("sh").count()
+      .write.format("noop").mode("overwrite").save()
+    GraftSession.reset(spark)
+  }
+
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(Tables.NanosAsLong, "true")
-      // ~240 queries × several codegen units far exceed the default
-      // 100-entry generated-class cache: constant eviction forces a Janino
-      // recompile of every heavy expression tree on EVERY attempt, which
-      // measured as a 5-10× inflation of the late-run queries. Static conf,
-      // so it must be set before the session exists. Raised 5000 → 24000 in
-      // r15: the 243-query × 3-pass working set crossed 5000 generated
-      // classes and pass 3 ran 2.9× pass 2 (see pass_diag below — the
-      // per-pass recompile count is now self-evidencing on the diagnostics
-      // line). Cache entries are weak-ref'd class holders; 24k of them is
-      // tens of MB against a 24g heap.
-      .config("spark.sql.codegen.cache.maxEntries", "24000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.installOptimizations(spark)
+    val spark = GraftSession(s"local[$cpus]")
     // Capture QueryExecutions so shuffle-byte metrics can be read after the
     // run. Some queries run intermediate driver actions inside q.run (a
     // temp-sink write, a centroid collect) — each fires its own listener
@@ -159,35 +177,7 @@ object Bench {
       while (!qeEvents.isEmpty) last = qeEvents.poll()
       Option(last)
     }
-    // JVM warmup outside the timed region: class loading, codegen compiler
-    // and parquet reader init otherwise land entirely on the first query.
-    spark.range(1000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()
-    Tables.lineitem(spark, sfDir).limit(100).write.format("noop").mode("overwrite").save()
-    // Also exercise the execution paths nearly every query goes through —
-    // shuffle write/read, hash aggregate, sort-merge/broadcast join,
-    // window, global sort — so the interpreter→C2 compilation of that
-    // shared machinery happens here instead of inside pass 1's timed
-    // regions (measured: pass-1 total ran ~1.5× the pass-3 floor, far
-    // beyond per-query codegen cost). Tiny synthetic input; no data or
-    // results are retained (the noop sink discards every row).
-    locally {
-      import org.apache.spark.sql.functions.{col, row_number}
-      val wr = spark.range(0, 200000, 1, 8).selectExpr("id % 1000 AS k", "id AS v")
-      wr.groupBy("k").count().join(wr, "k")
-        .withColumn("rn", row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy("k").orderBy("v")))
-        .orderBy("k", "rn").limit(1000)
-        .write.format("noop").mode("overwrite").save()
-      // the text-kernel path (tokenize + shingle explode) the dedup pack
-      // leans on, over a 200-doc slice — compiles the native expressions
-      Tables.documents(spark, sfDir).limit(200)
-        .select(col("doc_id"),
-          org.apache.spark.sql.functions.explode(
-            graft.functions.NativeExprs.wordShingles(col("text"), 3)).as("sh"))
-        .groupBy("sh").count()
-        .write.format("noop").mode("overwrite").save()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-    }
+    warmup(spark, sfDir)
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val headline = SparkEntry.headline
     val passTimes = scala.collection.mutable.LinkedHashMap.empty[String, Vector[Double]]
@@ -220,16 +210,13 @@ object Bench {
     // generated-class cache is thrashing — the r15 failure mode where pass 3
     // ran 2.9× pass 2 and every "slow query" was really cache eviction.
     // Self-evidence on the diagnostics line, like the load probes.
-    def gcMillis: Long =
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(_.getCollectionTime).sum
     def passSnap: (Long, Long, Long) = (
       System.nanoTime(),
       org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
       gcMillis)
     val passSnaps = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
     for (pass <- 1 to Attempts; q <- headline) {
-      if (q == headline.head) { probes += loadProbe(cpus.toInt); passSnaps += passSnap }
+      if (q == headline.head) { probes += loadProbe(cpus); passSnaps += passSnap }
       val t0 = System.nanoTime()
       try {
         qeEvents.clear()
@@ -249,16 +236,10 @@ object Bench {
           errors(q.name) = e.toString.take(300)
           drainBuilds() // a build that preceded the failure is still one-off cost
       }
-      // drop caches a query marked, so the next query starts clean
-      spark.catalog.clearCache()
-      // also drop RDD-level leftovers clearCache cannot see: fixpoint
-      // queries localCheckpoint() their final state, and those blocks
-      // otherwise stay pinned until a GC the 24g heap rarely runs —
-      // 729 executions of leftovers competing with later queries'
-      // execution memory. Outside the timed region, like clearCache.
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      // outside the timed region, so the next query starts clean
+      GraftSession.reset(spark)
     }
-    probes += loadProbe(cpus.toInt)
+    probes += loadProbe(cpus)
     passSnaps += passSnap
     val passDiag = passSnaps.toSeq.sliding(2).collect {
       case Seq((t0, c0, g0), (t1, c1, g1)) =>
@@ -274,15 +255,8 @@ object Bench {
       (q.name, med, times)
     }
     def num(t: Double) = "%.3f".formatLocal(Locale.ROOT, t)
-    def jstr(s: String) =
-      "\"" + s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => "\\u%04x".formatLocal(Locale.ROOT, c.toInt)
-        case c => c.toString
-      } + "\""
     val attempts = results
-      .map { case (k, _, ts) => jstr(k) + ":" + ts.map(num).mkString("[", ",", "]") }
+      .map { case (k, _, ts) => Json.str(k) + ":" + ts.map(num).mkString("[", ",", "]") }
       .mkString("{", ",", "}")
     // A failed query contributes NO time (not a truncated partial) and the
     // run exits nonzero — a broken query must fail the round, not quietly
@@ -295,9 +269,9 @@ object Bench {
     // Errors are capped on the summary line (full text on the detail line
     // and stderr) so one long stack trace can't blow the length budget.
     val errJson =
-      errors.map { case (k, v) => jstr(k) + ":" + jstr(v.take(60)) }.mkString("{", ",", "}")
+      errors.map { case (k, v) => Json.str(k) + ":" + Json.str(v.take(60)) }.mkString("{", ",", "}")
     val shuffles = results
-      .map { case (k, _, _) => jstr(k) + ":" + shuffleBytes.get(k).map(_.toString).getOrElse("null") }
+      .map { case (k, _, _) => Json.str(k) + ":" + shuffleBytes.get(k).map(_.toString).getOrElse("null") }
       .mkString("{", ",", "}")
     // The driver captures only the LAST ~2000 chars of stdout (measured
     // from BENCH_r04/r05 "tail"), and sbt appends a ~78-char "[success]"
@@ -333,11 +307,11 @@ object Bench {
     // readable from the summary line ALONE because the driver's ~2000-char
     // tail capture is only guaranteed to keep this last line whole.
     def slowStats(slowN: Int) = byCost.take(slowN)
-      .map { case (k, med) => jstr(k) + ":[" + num(minOf(k)) + "," + num(med) + "]" }
+      .map { case (k, med) => Json.str(k) + ":[" + num(minOf(k)) + "," + num(med) + "]" }
       .mkString("{", ",", "}")
     def line(entries: Seq[(String, Double)], omitted: Int, slowN: Int) = {
       val qs = entries
-        .map { case (k, med) => jstr(k) + ":" + num(med) }
+        .map { case (k, med) => Json.str(k) + ":" + num(med) }
         .mkString("{", ",", "}")
       val omittedField = if (omitted > 0) s""""queries_omitted":$omitted,""" else ""
       s"""{"metric":"total","value":$total,"unit":"sec","total_min":$totalMin,""" +
@@ -368,7 +342,7 @@ object Bench {
     val stats = results
       .collect { case (k, Some(med), ts) => (k, ts.min, med) }
       .sortBy(_._3)
-      .map { case (k, mn, med) => jstr(k) + ":[" + num(mn) + "," + num(med) + "]" }
+      .map { case (k, mn, med) => Json.str(k) + ":[" + num(mn) + "," + num(med) + "]" }
       .mkString("{", ",", "}")
     // Two lines, diagnostics FIRST and the driver-parsed summary LAST.
     // build_sec: per-artifact one-off build seconds drained out of the
@@ -378,12 +352,12 @@ object Bench {
     // (e.g. SMT-2 with fewer physical cores, where an idle tN/t1 runs
     // higher) can recalibrate the 1.8 threshold instead of trusting it.
     val buildsJson = buildSec
-      .map { case (k, v) => jstr(k) + ":" + num(v) }
+      .map { case (k, v) => Json.str(k) + ":" + num(v) }
       .mkString("{", ",", "}")
     println(
       s"""{"detail":"bench_diagnostics","attempts":$attempts,"shuffle_write_bytes":$shuffles,"errors_full":${errors
-          .map { case (k, v) => jstr(k) + ":" + jstr(v) }
-          .mkString("{", ",", "}")},"load_probes_1_vs_n":$probesJson,"probe_threads":${cpus.toInt},"host_cpus":${Runtime
+          .map { case (k, v) => Json.str(k) + ":" + Json.str(v) }
+          .mkString("{", ",", "}")},"load_probes_1_vs_n":$probesJson,"probe_threads":$cpus,"host_cpus":${Runtime
           .getRuntime.availableProcessors()},"pass_diag":$passDiag,"build_sec":$buildsJson,"min_median":$stats}""")
     println(kept)
     spark.stop()

@@ -68,17 +68,28 @@ object Warehouse {
 
   private val MetaFile = "_graft_meta" // "_" prefix: invisible to scans
 
-  /** (relpath, size, mtime) of every file under `root`, sorted — a
-    * metadata-only directory fingerprint input (no data is read). */
-  private def listMeta(root: java.io.File, prefix: String = ""): Seq[String] =
+  /** `relpath:leaf(file)` for every file under `root`, sorted — a
+    * directory fingerprint input. */
+  private def listFiles(root: java.io.File, leaf: java.io.File => String,
+      prefix: String = ""): Seq[String] =
     if (!root.exists()) Seq.empty
-    else if (root.isFile) Seq(s"$prefix${root.getName}:${root.length}:${root.lastModified}")
+    else if (root.isFile) Seq(s"$prefix${root.getName}:${leaf(root)}")
     else Option(root.listFiles()).getOrElse(Array.empty).sortBy(_.getName).toSeq
-      .flatMap(f => listMeta(f, s"$prefix${root.getName}/"))
+      .flatMap(f => listFiles(f, leaf, s"$prefix${root.getName}/"))
 
-  private def md5(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+  /** Metadata only (size, mtime): no data is read. */
+  private def listMeta(root: java.io.File): Seq[String] =
+    listFiles(root, f => s"${f.length}:${f.lastModified}")
+
+  /** File bytes, not timestamps: an identical recompile rewrites every
+    * class file's mtime but none of its bytes. */
+  private def listContent(root: java.io.File): Seq[String] =
+    listFiles(root, f => md5(java.nio.file.Files.readAllBytes(f.toPath)))
+
+  private def md5(bytes: Array[Byte]): String =
+    java.security.MessageDigest.getInstance("MD5").digest(bytes).map("%02x".format(_)).mkString
+
+  private def md5(s: String): String = md5(s.getBytes("UTF-8"))
 
   /** Sorted (name, size, crc) lines for a jar's graft-relevant entries,
     * or empty when the jar carries no graft classes. CONTENT-derived on
@@ -109,9 +120,10 @@ object Warehouse {
     } catch { case scala.util.control.NonFatal(_) => Seq.empty }
 
   /** Fingerprint of the compiled library code on `classpath` — any
-    * recompile (classes-dir mtimes, jar entry CRCs) changes it, so
-    * artifacts built by older code are never reused (the
-    * build closure's constants are code, not data). Hashes EVERY
+    * recompile that changes code (classes-dir file bytes, jar entry CRCs)
+    * changes it, so artifacts built by older code are never reused (the
+    * build closure's constants are code, not data), while an identical
+    * recompile keeps every artifact. Hashes EVERY
     * graft-bearing classpath entry, not just the first: a forked test
     * JVM lists test-classes before classes, and taking only the first
     * would make main-library recompiles invisible to the fingerprint.
@@ -134,7 +146,7 @@ object Warehouse {
       .filter(_.nonEmpty)
     if (dirs.isEmpty && jarMetas.isEmpty) None
     else Some(md5((
-      dirs.sorted.map(p => listMeta(new java.io.File(p)).mkString("\n")) ++
+      dirs.sorted.map(p => listContent(new java.io.File(p)).mkString("\n")) ++
         jarMetas.sortBy(_.headOption.getOrElse(""))
           .map(m => "jar:" + m.mkString("\n"))).mkString("\u0000")))
   }

@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
-import graft.{SparkEntry, Tables}
+import graft.{GraftSession, SparkEntry}
 
 /** Multi-JVM execution gate — every other gate row and bench in this repo
   * runs `local[*]` (one JVM, no serialization boundary), which leaves the
@@ -79,17 +79,28 @@ object ClusterProbe {
     // warehouse store, then stored-table broadcast against a corpus scan
     "q_unigram_fertility")
 
-  // JDK17 module opens executors need when not launched via spark-submit
-  // (mirrors build.sbt's jdk17AddOpens / JavaModuleOptions.defaultModuleOptions)
-  private val addOpens = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-  ).map(p => s"--add-opens $p=ALL-UNNAMED").mkString(" ")
+  /** `body` in a fresh graft session on `master` whose executors, when
+    * forked as separate JVMs, can load the application; stops the session
+    * afterwards so two runs never coexist in one JVM. (SparkContext itself
+    * prefixes the executors' java options with the JDK module opens.) */
+  private def withSession[A](master: String, appName: String,
+      conf: Map[String, String] = Map.empty)(body: SparkSession => A): A = {
+    val spark = GraftSession(master, "ERROR", conf ++ Map(
+      "spark.app.name" -> appName,
+      "spark.executor.memory" -> "1g",
+      // executor JVMs are forked by the worker with only the
+      // distribution's jars on the classpath — the application classes
+      // (this repo) must be shipped explicitly, exactly as a real
+      // cluster run ships the application jar via spark-submit
+      "spark.executor.extraClassPath" -> System.getProperty("java.class.path")))
+    try body(spark)
+    finally {
+      spark.stop()
+      // allow a fresh context afterwards
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+    }
+  }
 
   /** Row count above which a query's compare surface becomes one md5
     * digest line (see the large-output guard in [[runQueries]]). At
@@ -109,34 +120,12 @@ object ClusterProbe {
   /** Run `names` in one fresh session on `master`; returns
     * name → sorted stringified rows (a query that throws maps to a
     * single `!ERROR:` row so the compare reports it instead of dying).
-    * Stops the session before returning so two runs never coexist in
-    * one JVM. Shared by the per-`sbt test` probe (13-query slice) and
-    * [[ClusterSweep]] (the FULL gate, once per round). */
+    * Shared by the per-`sbt test` probe (13-query slice) and
+    * [[ClusterSweep]] (the FULL gate). */
   def runQueries(master: String, sfDir: String, warehouse: String,
       names: Seq[String]): Map[String, Seq[String]] = {
-    val b = SparkSession.builder()
-      .master(master)
-      .appName("graft-cluster-probe")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.default.parallelism", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", warehouse)
-      .config(Tables.NanosAsLong, "true")
-      // static conf: a 255-query sweep session blows the default
-      // 100-entry generated-class cache (see Verify/Bench)
-      .config("spark.sql.codegen.cache.maxEntries", "24000")
-      .config("spark.executor.memory", "1g")
-      .config("spark.executor.extraJavaOptions", addOpens)
-      // executor JVMs are forked by the worker with only the
-      // distribution's jars on the classpath — the application classes
-      // (this repo) must be shipped explicitly, exactly as a real
-      // cluster run ships the application jar via spark-submit
-      .config("spark.executor.extraClassPath", System.getProperty("java.class.path"))
-    val spark = b.getOrCreate()
-    try {
-      spark.sparkContext.setLogLevel("ERROR")
-      graft.functions.GraftFunctions.installOptimizations(spark)
+    withSession(master, "graft-cluster-probe",
+        Map("spark.sql.warehouse.dir" -> warehouse)) { spark =>
       names.map { name =>
         // NonFatal only: a fatal JVM error (OOM, LinkageError) must kill
         // the sweep fast, not limp through the remaining ~240 queries as
@@ -155,16 +144,11 @@ object ClusterProbe {
           } catch { case scala.util.control.NonFatal(e) =>
             Seq(s"!ERROR: ${e.getClass.getSimpleName}: ${e.getMessage}")
           }
-        // drop query-marked caches (Dedup shingle/doc frames) so they
-        // can't accumulate across a 255-query sweep session
-        spark.catalog.clearCache()
+        // nothing a query cached or checkpointed accumulates across a
+        // 255-query sweep session
+        GraftSession.reset(spark)
         name -> rows
       }.toMap
-    } finally {
-      spark.stop()
-      // allow a fresh context afterwards
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
     }
   }
 
@@ -179,18 +163,7 @@ object ClusterProbe {
     (0 until 24).foreach { i =>
       java.nio.file.Files.writeString(src.resolve(f"part-$i%03d"), f"k$i%03d v$i\n")
     }
-    val b = SparkSession.builder()
-      .master(master)
-      .appName("graft-cluster-probe-stream")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.executor.memory", "1g")
-      .config("spark.executor.extraJavaOptions", addOpens)
-      .config("spark.executor.extraClassPath", System.getProperty("java.class.path"))
-    val spark = b.getOrCreate()
-    try {
-      spark.sparkContext.setLogLevel("ERROR")
+    withSession(master, "graft-cluster-probe-stream") { spark =>
       import org.apache.spark.sql.functions._
       val q = spark.readStream.format("graft-kv")
         .option("maxFilesPerTrigger", "7")
@@ -219,10 +192,6 @@ object ClusterProbe {
       (spark.read.format("graft-kv").load(out.toString)
         .collect().map(r => r.getString(0) + " " + r.getString(1)).sorted.toSeq
         ++ state)
-    } finally {
-      spark.stop()
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
     }
   }
 

@@ -8,22 +8,20 @@ import graft.SparkEntry
   * executors as separately-forked JVMs) and once under `local[8]`, and
   * exact-compare the collected, sorted, stringified rows per query.
   *
-  * Rationale: the slice caught a real cross-process bug on its first
-  * outing (q_corpus_build's observe metric re-fired on cache-evicted
-  * recompute under 1g executors) — the base rate says the remaining ~240
-  * rows that had only ever run in one JVM carry the same class of
-  * undischarged risk (closure serialization, ExpressionEncoder buffers,
-  * codegen reference objects, broadcast materialization). This main is
-  * the once-per-round full discharge; it is NOT wired into `sbt test`
-  * (the slice stays the per-commit guard) because two full gate runs cost
-  * tens of minutes.
+  * Rationale: every row that has only ever run in one JVM carries the
+  * cross-process risk the slice guards against (closure serialization,
+  * ExpressionEncoder buffers, codegen reference objects, broadcast
+  * materialization), and the slice has caught such a bug (NOTES_BUILD.md).
+  * This main is the full discharge; it is NOT wired into `sbt test` (the
+  * slice stays the per-commit guard) because two full gate runs cost tens
+  * of minutes.
   *
   * Environment: same as the probe — `SPARK_HOME=/opt/spark`,
   * `SPARK_SCALA_VERSION=2.13`; `GRAFT_ROUNDTRIP_DIR` defaults to a fresh
   * temp dir when unset (same-machine worker processes share the local
   * filesystem). Args: `[sfDir] [queryName...]` — no names = the full
   * gate. Exits nonzero on any divergence; results are recorded in
-  * NOTES_BUILD.md per round.
+  * NOTES_BUILD.md.
   */
 object ClusterSweep {
   def main(args: Array[String]): Unit = {

@@ -1,26 +1,15 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-
 /** Calibration probe for the PQ `_check` gate twins: for each SF dir
   * given, report the ADC rank of every true-top-10 member under the
   * plain-PQ and IVF-PQ orderings, plus the probe-order rank of each
   * member's IVF cell. These measurements size `CheckShortlistFrac` and
-  * `CheckIvfProbes` in Similarity (round-12 readings: worst ADC rank
-  * 110/500 = 22% of n at sf0.001, 271/2000 = 14% at sf0.1; worst cell
-  * rank 7/16 at sf0.001). Re-run after any codebook/seed change:
+  * `CheckIvfProbes` in Similarity (readings in NOTES_BUILD.md). Re-run
+  * after any codebook/seed change:
   * `sbt "runMain graft.tools.PqProbe /root/testdata/sf0.001 ..."`. */
 object PqProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .config(graft.Tables.NanosAsLong, "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.installOptimizations(spark)
+    val spark = graft.GraftSession("local[8]", "ERROR")
     args.foreach { d =>
       val (n, ranks, ivfRanks) = graft.operators.Similarity.pqProbe(spark, d)
       println(s"PROBE dir=$d n=$n adcRanksOfTrueTop10=${ranks.mkString(",")} ivfAdcRanks=${ivfRanks.mkString(",")}")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Timed A/B of the three answers to a skewed fact join (not part of the
@@ -21,17 +20,19 @@ import org.apache.spark.sql.functions._
 object SkewAb {
   def main(args: Array[String]): Unit = {
     val rows = if (args.nonEmpty) args(0).toLong else 20000000L
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // 8 shuffle partitions at any core count: the setting the A/B results
+    // in NOTES_BUILD.md were measured at
+    val spark = graft.GraftSession(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]",
+      "ERROR", Map("spark.sql.shuffle.partitions" -> "8"))
 
-    // materialized inputs (localCheckpoint) so the timed body is the JOIN,
-    // not the parallel-friendly data generation
-    def planted(s: SparkSession) = {
+    // the planted inputs in a fresh session with `conf`. SMJ is always
+    // forced: broadcast would hide the shuffle, and at real scale the right
+    // side is not broadcastable. Materialized (localCheckpoint) so the
+    // timed body is the JOIN, not the parallel-friendly data generation.
+    def planted(conf: (String, String)*) = {
+      val s = spark.newSession()
+      (("spark.sql.autoBroadcastJoinThreshold" -> "-1") +: conf)
+        .foreach { case (k, v) => s.conf.set(k, v) }
       val left = s.range(rows).select(
         when(col("id") % 100 =!= 0, lit(7L)).otherwise(col("id")).as("k"),
         col("id").as("payload"))
@@ -53,22 +54,18 @@ object SkewAb {
       println(f"[skew-ab] $label%-28s min=${times.map(_._1).min}%6.2f s  rows=$n")
     }
 
-    // a) unmitigated: AQE skew handling off, SMJ forced
-    val sA = spark.newSession()
-    sA.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    sA.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
-    val (lA, rA) = planted(sA)
+    val skewJoinOff = "spark.sql.adaptive.skewJoin.enabled" -> "false"
+
+    // a) unmitigated: AQE skew handling off
+    val (lA, rA) = planted(skewJoinOff)
     time3("baseline (skewJoin off)") { lA.join(rA, "k").count() }
 
-    // b) AQE split: defaults except forced SMJ (broadcast would hide the
-    // shuffle; at real scale the right side is not broadcastable)
-    val sB = spark.newSession()
-    sB.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    sB.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    sB.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-    sB.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "8MB")
-    sB.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8MB")
-    val (lB, rB) = planted(sB)
+    // b) AQE split
+    val (lB, rB) = planted(
+      "spark.sql.adaptive.skewJoin.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "8MB",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "8MB")
     time3("AQE skew-split") { lB.join(rB, "k").count() }
     // confirm the split actually fired — execute THIS frame's OWN
     // QueryExecution (count() would plan a separate aggregate and leave
@@ -81,20 +78,14 @@ object SkewAb {
     println(s"[skew-ab] AQE plan skew=true: ${pB.contains("skew=true")}")
 
     // c) manual salt (salt=8 — one sub-key per core here)
-    val sC = spark.newSession()
-    sC.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    sC.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
-    val (lC, rC) = planted(sC)
+    val (lC, rC) = planted(skewJoinOff)
     time3("Skew.saltedJoin (salt=8)") {
       graft.operators.Skew.saltedJoin(lC, rC, lC("k"), rC("k"), 8).count()
     }
 
     // d) audit-driven: Skew.autoSalt consulting a materialized audit of
     // the planted table — must land in the salted class (c), not (a)
-    val sD = spark.newSession()
-    sD.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    sD.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
-    val (lD, rD) = planted(sD)
+    val (lD, rD) = planted(skewJoinOff)
     val audit = graft.operators.Maintenance
       .skewAuditOf(lD.select(lit("planted.hot").as("tbl_col"), col("k")))
       .localCheckpoint()

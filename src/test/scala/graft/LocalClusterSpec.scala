@@ -21,33 +21,12 @@ import org.scalatest.funsuite.AnyFunSuite
 class LocalClusterSpec extends AnyFunSuite {
 
   test("representative query slice is identical under local-cluster[2,4] (real executor JVMs)") {
-    import scala.sys.process._
-    val javaBin = System.getProperty("java.home") + "/bin/java"
-    val cp = System.getProperty("java.class.path")
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar",
-    ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
     val rt = java.nio.file.Files.createTempDirectory("graft-probe-rt-").toString
-    val cmd = Seq(javaBin) ++ addOpens ++ Seq(
-      "-Xmx4g",
-      "-Dspark.ui.enabled=false",
-      "-Dspark.sql.session.timeZone=UTC",
-      "-cp", cp,
-      "graft.tools.ClusterProbe", "/root/testdata/sf0.001")
-    val env = Seq(
+    val (code, out) = ForkedMain.run("graft.tools.ClusterProbe", Nil, Seq(
       "SPARK_HOME" -> "/opt/spark",
       "SPARK_SCALA_VERSION" -> "2.13",
-      "GRAFT_ROUNDTRIP_DIR" -> rt)
-    val out = new StringBuilder
-    val code = Process(cmd, None, env: _*)
-      .!(ProcessLogger(l => out.append(l).append('\n'), l => out.append(l).append('\n')))
-    val probeLines = out.toString.linesIterator.filter(_.startsWith("[probe]")).mkString("\n")
+      "GRAFT_ROUNDTRIP_DIR" -> rt))
+    val probeLines = out.filter(_.startsWith("[probe]")).mkString("\n")
     assert(code === 0, s"ClusterProbe exited $code:\n$probeLines")
     assert(
       probeLines.contains(s"${graft.tools.ClusterProbe.slice.size}/" +

@@ -7,20 +7,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local SparkSession for specs. One session per suite; small
   * shuffle-partition count so tiny fixtures don't schedule 200 tasks. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = {
-    val s = SparkSession
-      .builder()
-      .master("local[4, 4]") // 4 threads, maxFailures=4 → retry semantics testable
-      .appName(getClass.getSimpleName)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(Tables.NanosAsLong, "true")
-      .getOrCreate()
-    // specs run with the same optimizer surface the mains install
-    graft.functions.GraftFunctions.installOptimizations(s)
-    s
-  }
+  // 4 threads, maxFailures=4 → retry semantics testable; the same
+  // session settings and optimizer surface the mains run with
+  lazy val spark: SparkSession =
+    GraftSession("local[4, 4]", conf = Map("spark.app.name" -> getClass.getSimpleName))
 
   override def afterAll(): Unit = {
     // Session is shared across suites in one JVM; don't stop it here.

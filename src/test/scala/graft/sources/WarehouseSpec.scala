@@ -186,6 +186,37 @@ class WarehouseSpec extends SparkSpec {
       "a different jar artifact must produce a different code fingerprint")
   }
 
+  test("codeFingerprint of a classes dir follows class bytes, not mtimes") {
+    import java.nio.file.Files
+    val src = Files.createTempDirectory("graft_wh_cls_a").resolve("classes")
+    val copy = Files.createTempDirectory("graft_wh_cls_b").resolve("classes")
+    tempDirs ++= Seq(src.getParent.toFile, copy.getParent.toFile)
+    val files = Seq("graft/A.class" -> 40, "graft/sub/B.class" -> 90, "META-INF/x" -> 8)
+    files.foreach { case (rel, n) =>
+      val f = src.resolve(rel)
+      Files.createDirectories(f.getParent)
+      Files.write(f, Array.tabulate[Byte](n)(i => (i * 31 + n).toByte))
+    }
+    // an identical recompile: same bytes, every mtime moved
+    files.foreach { case (rel, _) =>
+      val (f, dst) = (src.resolve(rel), copy.resolve(rel))
+      Files.createDirectories(dst.getParent)
+      Files.copy(f, dst)
+      Files.setLastModifiedTime(dst, java.nio.file.attribute.FileTime.fromMillis(
+        Files.getLastModifiedTime(f).toMillis + 3600000L))
+    }
+    val fpSrc = Warehouse.codeFingerprintOf(src.toString)
+    assert(fpSrc.isDefined)
+    assert(Warehouse.codeFingerprintOf(copy.toString) === fpSrc,
+      "an identical recompile must keep the code fingerprint")
+    val b = copy.resolve("graft/sub/B.class")
+    val bytes = Files.readAllBytes(b)
+    bytes(17) = (bytes(17) ^ 1).toByte
+    Files.write(b, bytes)
+    assert(Warehouse.codeFingerprintOf(copy.toString) !== fpSrc,
+      "one changed class byte must change the code fingerprint")
+  }
+
   test("a concurrent ensure cannot clear a mid-build table dir (build lock)") {
     val src = freshSrcDir("race")
     val name = Warehouse.tableName("graft_spec_reuse_r", src.toString)
